@@ -32,6 +32,7 @@ Spark's partition discovery per unit.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -86,6 +87,33 @@ _BOOLEAN_PROPERTIES = {
 # survive compaction (the spec's dataChange=false preservation rule).
 _MAT_ROW_ID = "_rt_mat_row_id"
 _MAT_RCV = "_rt_mat_rcv"
+
+# Merge-on-read reads tag every data row with its unit and every
+# delete-set row with its set (both straight from the file path), so
+# ONE anti-join applies every set to exactly the units it covers.
+_UNIT = "_mor_unit"
+_DELETES = "_deletes"
+
+
+def _path_after(root: str):
+    """The part of each row's file path after the last ``/<root>/``
+    segment — ``<unit>/…/part-….parquet`` under ``_data``; only valid
+    on a raw file relation (``_metadata`` dies at the first select)."""
+    return F.substring_index(F.col("_metadata.file_path"), f"/{root}/", -1)
+
+
+@functools.lru_cache(maxsize=4096)
+def _delete_set_keys(ds_dir: str) -> tuple[str, ...]:
+    """A delete set's key-column names, from one parquet footer —
+    driver-side IO, no Spark job. Sets are immutable and uuid-named,
+    so the answer is cached by path."""
+    import pyarrow.parquet as pq
+
+    for dirpath, _d, files in os.walk(ds_dir):
+        for fn in sorted(files):
+            if fn.endswith(".parquet") and not fn.startswith((".", "_")):
+                return tuple(pq.read_schema(os.path.join(dirpath, fn)).names)
+    raise UserException(f"Delete set {ds_dir} holds no parquet file.")
 
 # Change-feed action classification — canonical definitions live in
 # the light sinks.cdf_actions module (the streaming source's Python
@@ -711,7 +739,7 @@ class ManagedTable:
         position in the parquet file, exactly what the Delta DV bitmap
         indexes (delta PROTOCOL.md §Deletion Vectors).
         """
-        from urllib.parse import unquote, urlparse
+        from urllib.parse import unquote
 
         from component_delta_lake_writer_spark.sinks import (
             deletion_vectors as DV,
@@ -913,6 +941,10 @@ class ManagedTable:
                         ]
             return out
 
+        fields = {
+            f.name: f
+            for f in T.StructType.fromJson(json.loads(commit.schema_json))
+        }
         new_bitmaps: dict[str, list[int]] = {}
         for ds in pending:
             units = [u for u in ds["units"] if u in live_units]
@@ -949,7 +981,10 @@ class ManagedTable:
                         else:
                             new_bitmaps[rel] = idx
                     continue
-            dels = self.spark.read.parquet(ds_dir)
+            # the set's own key columns, typed by the committed schema:
+            # no schema-inference job
+            keys = list(_delete_set_keys(ds_dir))
+            key_schema = T.StructType([fields[k] for k in keys])
             if small:
                 # Tier 2 — SMALL build side: load the delete keys on
                 # the DRIVER (pyarrow, the same footers _ds_rows just
@@ -969,25 +1004,32 @@ class ManagedTable:
                 dels_build = _local.select(
                     *[
                         F.col(f.name).cast(f.dataType)
-                        for f in dels.schema.fields
+                        for f in key_schema.fields
                     ]
                 )
             else:
-                dels_build = dels.distinct()
-            scan = self.spark.read.parquet(
-                *[os.path.join(self._data_dir, u) for u in units]
+                dels_build = (
+                    self.spark.read.schema(key_schema)
+                    .parquet(ds_dir)
+                    .distinct()
+                )
+            # the shared unit scan: typed, column-mapped, and one
+            # FileScan even over several partitioned units
+            scan = self._scan_units(
+                [os.path.join(self._data_dir, u) for u in units],
+                key_schema,
+                mapping,
+                commit.partition_by,
+                with_row_meta=True,
             ).select(
-                F.col("_metadata.file_path").alias("_fp"),
-                F.col("_metadata.row_index").alias("_ri"),
-                *[
-                    F.col(mapping.get(c, c)).alias(c)
-                    for c in dels.columns
-                ],
+                F.col("_rt_rel").alias("_fp"),
+                F.col("_rt_ri").alias("_ri"),
+                *keys,
             )
             # delete sets are O(source delta) by design — broadcast so
             # the target scan never shuffles for the probe
             matched = scan.join(
-                F.broadcast(dels_build), dels.columns, "left_semi"
+                F.broadcast(dels_build), keys, "left_semi"
             ).select("_fp", "_ri")
             if small:
                 pairs = (
@@ -1006,9 +1048,7 @@ class ManagedTable:
             for fp, i in pairs:
                 grouped.setdefault(fp, set()).add(i)
             for fp, idx in grouped.items():
-                rel = os.path.relpath(
-                    unquote(urlparse(fp).path), self.path
-                )
+                rel = unquote(fp)
                 if rel in new_bitmaps:
                     new_bitmaps[rel] = sorted(set(new_bitmaps[rel]) | idx)
                 else:
@@ -2005,7 +2045,7 @@ class ManagedTable:
 
     @property
     def _deletes_dir(self) -> str:
-        return os.path.join(self.path, "_deletes")
+        return os.path.join(self.path, _DELETES)
 
     def _write_empty_change_set(
         self, prev: Commit, version: int, out_dir: str | None = None
@@ -2062,12 +2102,7 @@ class ManagedTable:
         (the ``_metadata`` pseudo-column dies at the first select)."""
         return df.withColumn(
             "_rt_rel",
-            F.concat(
-                F.lit(_DATA + "/"),
-                F.substring_index(
-                    F.col("_metadata.file_path"), "/" + _DATA + "/", -1
-                ),
-            ),
+            F.concat(F.lit(_DATA + "/"), _path_after(_DATA)),
         ).withColumn("_rt_ri", F.col("_metadata.row_index"))
 
     def _scan_units(
@@ -2077,10 +2112,13 @@ class ManagedTable:
         mapping: dict,
         partition_by: list[str] | None = None,
         with_row_meta: bool = False,
+        with_unit: bool = False,
     ) -> DataFrame:
         """One multi-path FileScan under the physical schema, aliased
         back to logical names — the single place reads cross the
-        column-mapping boundary.
+        column-mapping boundary. ``with_unit`` adds the ``_mor_unit``
+        column (each row's data unit, from its file path) that the
+        delete-set anti-join keys applicability on.
 
         Partitioned tables with MULTIPLE unit dirs can't use Spark's
         native partition discovery (each unit is its own hive root, and
@@ -2104,15 +2142,30 @@ class ManagedTable:
                 ]
             )
 
-        meta_cols = ["_rt_rel", "_rt_ri", _MAT_ROW_ID, _MAT_RCV]
-        pset = set(partition_by or [])
-        part_fields = [f for f in schema.fields if f.name in pset]
-        if not part_fields or len(paths) == 1:
-            df = self.spark.read.schema(
-                _with_mat(self._physical_schema(schema, mapping))
-            ).parquet(*paths)
+        meta_cols = (
+            ["_rt_rel", "_rt_ri", _MAT_ROW_ID, _MAT_RCV] if with_row_meta else []
+        ) + ([_UNIT] if with_unit else [])
+
+        def _tag(df: DataFrame) -> DataFrame:
+            # on the RAW relation: `_metadata` dies at the first select
             if with_row_meta:
                 df = self._row_meta_cols(df)
+            if with_unit:
+                df = df.withColumn(
+                    _UNIT, F.substring_index(_path_after(_DATA), "/", 1)
+                )
+            return df
+
+        pset = set(partition_by or [])
+        # keyed on the layout, not on the requested columns: a scan
+        # that asks for no partition column still cannot take
+        # multi-root discovery
+        if not pset or len(paths) == 1:
+            df = _tag(
+                self.spark.read.schema(
+                    _with_mat(self._physical_schema(schema, mapping))
+                ).parquet(*paths)
+            )
             if mapping:
                 df = df.select(
                     *(
@@ -2120,7 +2173,7 @@ class ManagedTable:
                             F.col(mapping.get(f.name, f.name)).alias(f.name)
                             for f in schema.fields
                         ]
-                        + (meta_cols if with_row_meta else [])
+                        + meta_cols
                     )
                 )
             return df
@@ -2134,8 +2187,7 @@ class ManagedTable:
             .option("recursiveFileLookup", "true")
             .parquet(*paths)
         )
-        if with_row_meta:
-            df = self._row_meta_cols(df)
+        df = _tag(df)
         cols = []
         for f in schema.fields:
             if f.name in pset:
@@ -2161,9 +2213,7 @@ class ManagedTable:
                 cols.append(
                     F.col(mapping.get(f.name, f.name)).alias(f.name)
                 )
-        if with_row_meta:
-            cols += [F.col(c) for c in meta_cols]
-        return df.select(*cols)
+        return df.select(*cols, *meta_cols)
 
     @staticmethod
     def _logical_stats(stats: dict, mapping: dict) -> dict:
@@ -2198,19 +2248,20 @@ class ManagedTable:
         commit: Commit,
         units: list[str],
         with_row_ids: bool = False,
+        paths: list[str] | None = None,
     ) -> DataFrame:
         """One multi-path scan over a subset of a commit's data units,
         under the commit's authoritative schema — with the commit's
-        merge-on-read delete sets applied.
+        merge-on-read delete sets applied. ``paths`` narrows the scan
+        to files inside ``units`` (read_where's file-level skipping).
 
-        Units sharing the same set of applicable delete files scan
-        together; each group anti-joins its deleted-PK set once. With
-        no delete sets (the common case, and always after optimize)
-        the plan is the single FileScan it always was; with them, plan
-        size is O(#delete epochs since last optimize), bounded by
-        maintenance cadence — never O(deletes)."""
+        With no delete set covering the units (the common case, and
+        always after optimize) the plan is the bare FileScan it always
+        was. With them it is still ONE data scan: each row carries its
+        unit, and one anti-join per distinct key-column list drops
+        the rows whose key a covering set holds — plan size and Spark
+        job count O(1) in the number of pending sets."""
         schema = T.StructType.fromJson(json.loads(commit.schema_json))
-        mapping = commit.column_mapping or {}
         if with_row_ids and not _prop_on(
             commit.properties, "delta.enableRowTracking"
         ):
@@ -2221,40 +2272,71 @@ class ManagedTable:
                 "Row tracking is not enabled on this table; create it "
                 "with properties={'delta.enableRowTracking': 'true'}."
             )
-
-        def scan(us: list[str]) -> DataFrame:
-            paths = [os.path.join(self._data_dir, u) for u in us]
-            df = self._scan_units(
-                paths, schema, mapping, commit.partition_by,
-                with_row_meta=with_row_ids,
-            )
-            if with_row_ids:
-                df = self._attach_row_ids(df, commit)
+        want = set(units)
+        sets = {}
+        for ds in commit.delete_sets or []:
+            us = [u for u in ds["units"] if u in want]
+            if us:
+                sets[ds["path"]] = us
+        df = self._scan_units(
+            paths or [os.path.join(self._data_dir, u) for u in units],
+            schema,
+            commit.column_mapping or {},
+            commit.partition_by,
+            with_row_meta=with_row_ids,
+            with_unit=bool(sets),
+        )
+        if with_row_ids:
+            df = self._attach_row_ids(df, commit)
+        if not sets:
             return df
+        return self._anti_join_delete_sets(df, schema, sets)
 
-        if not commit.delete_sets:
-            return scan(units)
-        groups: dict[tuple, list[str]] = {}
-        for u in units:
-            key = tuple(
-                ds["path"]
-                for ds in commit.delete_sets
-                if u in set(ds["units"])
-            )
-            groups.setdefault(key, []).append(u)
-        parts = []
-        for key, us in groups.items():
-            df = scan(us)
-            if key:
-                dels = self.spark.read.parquet(
-                    *[os.path.join(self._deletes_dir, p) for p in key]
+    def _anti_join_delete_sets(
+        self, df: DataFrame, schema: T.StructType, sets: dict[str, list[str]]
+    ) -> DataFrame:
+        """Drop the rows of ``df`` (tagged with ``_mor_unit``) whose
+        key a covering delete set holds; ``sets`` maps each set's
+        path to the units it applies to here.
+
+        All sets with the same key columns are ONE scan under the
+        committed schema's key fields (no schema-inference job), each
+        row tagged with its set, and ONE ``left_anti`` join whose
+        residual condition asks whether that set covers the data
+        row's unit — a constant map, metadata-sized. Key equality is
+        SQL equality, so a NULL-keyed row never matches and survives,
+        as in a MERGE."""
+        fields = {f.name: f for f in schema.fields}
+        covers = F.create_map(
+            *[
+                x
+                for name, us in sets.items()
+                for x in (F.lit(name), F.array(*[F.lit(u) for u in us]))
+            ]
+        )
+        by_keys: dict[tuple, list[str]] = {}
+        for name in sets:
+            keys = _delete_set_keys(os.path.join(self._deletes_dir, name))
+            by_keys.setdefault(keys, []).append(name)
+        for keys, names in by_keys.items():
+            dk = [f"_mor_dk{i}" for i in range(len(keys))]
+            dels = (
+                self.spark.read.schema(
+                    T.StructType([fields[k] for k in keys])
                 )
-                df = df.join(dels, list(dels.columns), "left_anti")
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+                .parquet(*[os.path.join(self._deletes_dir, n) for n in names])
+                .select(
+                    *[F.col(k).alias(d) for k, d in zip(keys, dk)],
+                    F.substring_index(_path_after(_DELETES), "/", 1).alias(
+                        "_mor_set"
+                    ),
+                )
+            )
+            cond = F.array_contains(covers[F.col("_mor_set")], F.col(_UNIT))
+            for k, d in zip(keys, dk):
+                cond = (F.col(k) == F.col(d)) & cond
+            df = df.join(dels, cond, "left_anti")
+        return df.drop(_UNIT)
 
     def _attach_row_ids(self, df: DataFrame, commit: Commit) -> DataFrame:
         """``_row_id`` / ``_row_commit_version`` from the commit's
@@ -2434,7 +2516,9 @@ class ManagedTable:
         individual files inside surviving units, exactly Delta's
         per-add-action skipping. Partitioned units stay unit-granular
         (reading bare leaf files would drop hive partition columns;
-        those tables already get Spark's partition pruning).
+        those tables already get Spark's partition pruning). Pending
+        merge-on-read delete sets keep both levels: the pruned file
+        list goes through the same one-scan anti-join as ``read``.
 
         At 100 TB this is the difference between "scan 5 files" and
         "open every footer of a million files" for a point/range query
@@ -2473,18 +2557,8 @@ class ManagedTable:
             units = prune_units_bloom(
                 self._bloom_dir, stats_view, units, conjuncts
             )
-        if commit.delete_sets:
-            # merge-on-read deletes pending: unit-level pruning still
-            # applies, but the scan must route through the delete-set
-            # anti-joins (file-level path lists can't carry them)
-            if not units:
-                empty = self.spark.createDataFrame([], schema)
-                return empty.filter(F.expr(eff_condition))
-            return self._read_units(commit, units).filter(
-                F.expr(eff_condition)
-            )
         paths: list[str] = []
-        file_level = bool(parse_conjuncts(condition)) and not commit.partition_by
+        file_level = bool(conjuncts) and not commit.partition_by
         for u in units:
             udir = os.path.join(self._data_dir, u)
             detail = (stats_view.get(u) or {}).get("_files")
@@ -2501,9 +2575,12 @@ class ManagedTable:
         if not paths:
             empty = self.spark.createDataFrame([], schema)
             return empty.filter(F.expr(eff_condition))
-        return self._scan_units(
-            paths, schema, mapping, commit.partition_by
-        ).filter(F.expr(eff_condition))
+        # pending merge-on-read delete sets apply to the pruned file
+        # list as to a whole-unit scan: each row's unit comes from its
+        # file path
+        return self._read_units(commit, units, paths=paths).filter(
+            F.expr(eff_condition)
+        )
 
     # ---------- upsert (W12 + O2) ----------
 
@@ -3330,7 +3407,23 @@ class ManagedTable:
             return prev  # already applied — idempotent no-op
         if not prev.primary_key:
             raise UserException("delete_keys requires a primary key.")
-        key_set = keys.select(*prev.primary_key).distinct().persist()
+        # the set is stored under the table's key types, so readers can
+        # scan every set with the committed schema; a key that does not
+        # survive the cast equal to itself matches no row and is dropped
+        key_types = {
+            f.name: f.dataType
+            for f in T.StructType.fromJson(json.loads(prev.schema_json))
+        }
+        keys = keys.select(*prev.primary_key)
+        cols, exact = [], F.lit(True)
+        for k in prev.primary_key:
+            if keys.schema[k].dataType == key_types[k]:
+                cols.append(F.col(k))
+                continue
+            cast = F.col(k).try_cast(key_types[k])
+            exact = exact & (cast == F.col(k))
+            cols.append(cast.alias(k))
+        key_set = keys.filter(exact).select(*cols).distinct().persist()
         try:
             bounds = self._source_key_bounds(key_set, prev.primary_key)
             touched = [
@@ -4605,7 +4698,7 @@ class ManagedTable:
         if not shallow:
             shutil.copytree(self.path, dest, dirs_exist_ok=True)
             return ManagedTable(self.spark, dest)
-        link_roots = (_DATA, "_deletes")
+        link_roots = (_DATA, _DELETES)
         src_root = self.path
 
         def _link_or_copy(s: str, d: str) -> None:

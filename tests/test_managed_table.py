@@ -1942,3 +1942,160 @@ def test_identity_generated_cdf_composite(spark, tmp_path_str):
     t.write(df.withColumn("k", F.col("k") + 200), mode="append")
     rids2 = [r["rid"] for r in t.read().collect()]
     assert len(rids2) == len(set(rids2)) == 78
+
+
+def _rows(df, cols):
+    return sorted(
+        (tuple(r[c] for c in cols) for r in df.collect()),
+        key=lambda t: tuple((x is None, x) for x in t),
+    )
+
+
+def _model_rows(model, nulls=()):
+    return sorted(
+        [(k, *v) for k, v in model.items()] + list(nulls),
+        key=lambda t: tuple((x is None, x) for x in t),
+    )
+
+
+def _count_jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"jobs-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mor_delete_sets_match_dict_model(spark, tmp_path_str):
+    """Merge-on-read reads against a Python dict model, on a table
+    with several pending delete sets of differing unit coverage (two
+    upserts, a delete_keys set, another upsert) over a renamed
+    non-PK column and a surviving NULL-PK row: read(), read(version=),
+    read_where and read(with_row_ids=True) all agree with the model,
+    and a partitioned multi-unit table does too."""
+    t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
+    schema = "k long, v string, w long"
+    null_row = (None, "null-pk", -1)
+    t.write(
+        spark.createDataFrame(
+            [(k, f"a{k}", k) for k in range(20)] + [null_row], schema
+        ),
+        mode="overwrite",
+        primary_key=["k"],
+        properties={"delta.enableRowTracking": "true"},
+    )
+    model = {k: (f"a{k}", k) for k in range(20)}
+    t.write(
+        spark.createDataFrame([(k, f"b{k}", k) for k in range(20, 30)], schema),
+        mode="append",
+    )
+    model.update({k: (f"b{k}", k) for k in range(20, 30)})
+    t.rename_column("v", "val")
+    cols = ["k", "val", "w"]
+    first_ids = {
+        r["k"]: r["_row_id"] for r in t.read(with_row_ids=True).collect()
+    }
+    snapshots = {t.latest_commit().version: dict(model)}
+
+    def upsert(rows):
+        t.upsert(
+            spark.createDataFrame(rows, "k long, val string, w long"),
+            ["k"],
+            strategy="merge-on-read",
+        )
+        model.update({k: (v, w) for k, v, w in rows})
+        snapshots[t.latest_commit().version] = dict(model)
+
+    upsert([(1, "u1", 100), (2, "u2", 100), (21, "u21", 100), (40, "n40", 100)])
+    upsert([(25, "u25", 200), (26, "u26", 200)])  # the first unit's range misses
+    t.delete_keys(spark.createDataFrame([(3,), (22,), (99,)], "k int"))
+    for k in (3, 22):
+        del model[k]
+    snapshots[t.latest_commit().version] = dict(model)
+    upsert([(5, "u5", 300), (25, "u25b", 300)])
+
+    c = t.latest_commit()
+    assert len(c.delete_sets) == 4
+    assert len({tuple(ds["units"]) for ds in c.delete_sets}) > 1
+    assert _rows(t.read(), cols) == _model_rows(model, [null_row])
+    for v, snap in snapshots.items():
+        assert _rows(t.read(version=v), cols) == _model_rows(snap, [null_row])
+    assert _rows(t.read_where("k >= 20"), cols) == _model_rows(
+        {k: r for k, r in model.items() if k >= 20}
+    )
+    assert _rows(t.read_where("k = 25"), cols) == [(25, "u25b", 300)]
+    assert t.read_where("k = 3").count() == 0
+    assert _rows(t.read_where("val = 'null-pk'"), cols) == [null_row]
+
+    tracked = t.read(with_row_ids=True)
+    assert _rows(tracked, cols) == _model_rows(model, [null_row])
+    ids = {r["k"]: r["_row_id"] for r in tracked.collect()}
+    assert len(set(ids.values())) == len(ids) == len(model) + 1
+    # untouched rows keep the id they had before any delete set
+    for k in (0, 4, 10, 29, None):
+        assert ids[k] == first_ids[k]
+
+    # partitioned, several units: the unit tag comes from the leaf path
+    p = ManagedTable(spark, os.path.join(tmp_path_str, "p"))
+    pschema = "k long, p int, v string"
+    pmodel = {}
+    for lo in (0, 12, 24):
+        rows = [(k, k % 3, f"r{k}") for k in range(lo, lo + 12)]
+        p.write(
+            spark.createDataFrame(rows, pschema),
+            mode="append" if lo else "overwrite",
+            partition_by=["p"],
+            primary_key=["k"],
+        )
+        pmodel.update({k: (pp, v) for k, pp, v in rows})
+    for rows in (
+        [(1, 1, "x1"), (13, 1, "x13")],
+        [(30, 0, "x30"), (40, 1, "x40")],
+    ):
+        p.upsert(
+            spark.createDataFrame(rows, pschema), ["k"], strategy="merge-on-read"
+        )
+        pmodel.update({k: (pp, v) for k, pp, v in rows})
+    p.delete_keys(spark.createDataFrame([(2,), (27,)], "k long"))
+    del pmodel[2], pmodel[27]
+    assert len(p.latest_commit().delete_sets) == 3
+    pcols = ["k", "p", "v"]
+    assert _rows(p.read(), pcols) == _model_rows(pmodel)
+    assert _rows(p.read_where("p = 1"), pcols) == _model_rows(
+        {k: r for k, r in pmodel.items() if r[0] == 1}
+    )
+
+
+def test_mor_read_jobs_flat_in_delete_sets(spark, tmp_path_str):
+    """Reading through 4 pending delete sets runs as many Spark jobs
+    as reading through 1: one delete-side scan per key-column list,
+    never one per set or per group of units. Each upsert overlaps the
+    previous one, so every set covers a different group of units."""
+    t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
+    t.write(
+        spark.range(40).selectExpr("id AS k", "id AS v"),
+        mode="overwrite",
+        primary_key=["k"],
+    )
+
+    def upsert(lo):
+        t.upsert(
+            spark.range(lo, lo + 3).selectExpr("id AS k", "-1 - id AS v"),
+            ["k"],
+            strategy="merge-on-read",
+        )
+
+    upsert(0)
+    assert len(t.latest_commit().delete_sets) == 1
+    one = _count_jobs(spark, lambda: t.read().collect())
+    for lo in (2, 4, 6):
+        upsert(lo)
+    sets = t.latest_commit().delete_sets
+    assert len(sets) == 4 and len({tuple(ds["units"]) for ds in sets}) == 4
+    four = _count_jobs(spark, lambda: t.read().collect())
+    assert one == four, (one, four)
+    assert t.read().count() == 40
+    assert t.read().filter("v < 0").count() == 9

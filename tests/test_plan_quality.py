@@ -355,6 +355,29 @@ def test_mor_delete_antijoin_broadcasts_small_delete_set(spark, tmp_path):
     t.upsert(src, ["k"], strategy="merge-on-read")
     plan2 = t.read()._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan2 and "SortMergeJoin" not in plan2
+    # several MOR upserts with differing unit coverage: still ONE data
+    # scan and ONE broadcast anti-join, never a per-group union
+    for lo in (500, 20_000, 20_250):
+        t.upsert(
+            spark.range(lo, lo + 500).select(
+                F.col("id").alias("k"), F.lit(-2).cast("long").alias("v")
+            ),
+            ["k"],
+            strategy="merge-on-read",
+        )
+    sets = t.latest_commit().delete_sets
+    assert len(sets) >= 4 and len({tuple(ds["units"]) for ds in sets}) > 1
+    plan3 = t.read()._jdf.queryExecution().executedPlan().toString()
+    anti = [
+        ln for ln in plan3.splitlines()
+        if "BroadcastHashJoin" in ln and "LeftAnti" in ln
+    ]
+    assert len(anti) == 1, plan3
+    scans = [ln for ln in plan3.splitlines() if "FileScan parquet" in ln]
+    # one data scan (k, v) and one delete-set scan (k) for all sets
+    assert len(scans) == 2, plan3
+    assert sum("struct<k:bigint,v:bigint>" in ln for ln in scans) == 1
+    assert "Union" not in plan3 and "SortMergeJoin" not in plan3, plan3
 
 
 def test_partitioned_multiunit_read_is_single_scan(tmp_path, spark):
